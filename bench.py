@@ -89,7 +89,7 @@ def run_pipeline(spark, images_path: str) -> tuple[float, int]:
 
 def run_pyramid(spark, images_path: str) -> float:
     """Full pyramid (base + overview reduction to z8) — reported separately;
-    the level loop is the shuffle-bearing part of the workload."""
+    map-only, one task renders each image's whole pyramid."""
     from pyspark.sql import functions as F
 
     from gdal_spark.operators.tiling import build_tile_pyramid
@@ -97,9 +97,9 @@ def run_pyramid(spark, images_path: str) -> float:
     imgs = spark.read.parquet(images_path)
     spark.catalog.clearCache()
     t0 = time.time()
-    # codec="internal": this consumer aggregates checksums only — matches
+    # codec=None: this consumer aggregates checksums only — matches
     # the tile_pyramid driver query; sink formats belong to the write paths
-    build_tile_pyramid(imgs, tminz=8, codec="internal").agg(
+    build_tile_pyramid(imgs, tminz=8, codec=None).agg(
         F.count("*"), F.sum("cs1")
     ).collect()
     return time.time() - t0

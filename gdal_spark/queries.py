@@ -1400,9 +1400,8 @@ def tile_pyramid_q(spark, sf_dir):
 
     imgs = images_df(spark, _images_n(sf_dir))
     zmin = 8  # gsd cycle -> native zooms 8..13; reduce coarsest level to z8
-    # codec="internal": only checksum columns are consumed — the tile
-    # bytes stay in the transport codec, no transcode pass at all
-    return build_tile_pyramid(imgs, tminz=zmin, codec="internal").select(
+    # codec=None: only checksum columns are consumed — no tile bytes
+    return build_tile_pyramid(imgs, tminz=zmin, codec=None).select(
         "image_id", "z", "x", "y", "cs1", "cs2", "cs3"
     )
 
@@ -1922,7 +1921,7 @@ def pyramid_keys_q(spark, sf_dir):
     from .operators.tiling import build_tile_pyramid
 
     imgs = images_df(spark, min(_images_n(sf_dir), 60))
-    return build_tile_pyramid(imgs, tminz=8, codec="internal").select(
+    return build_tile_pyramid(imgs, tminz=8, codec=None).select(
         "image_id", F.col("z").cast("long").alias("z"),
         F.col("x").cast("long").alias("x"), F.col("y").cast("long").alias("y"),
     )

@@ -3,6 +3,8 @@
 Single place for the scale-oriented defaults: AQE (runtime re-plan + skew-join
 splitting), Arrow-batched pandas UDF transfer, and a shuffle-partition count
 sized to the local core count (on a real cluster this is set per job size).
+The session-settable part is ``runtime.SESSION_CONFS``, which
+``ensure_runtime`` also applies to sessions built elsewhere.
 """
 
 from __future__ import annotations
@@ -10,6 +12,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .runtime import SESSION_CONFS, ensure_pythonpath
 
 
 def get_spark(
@@ -20,14 +24,7 @@ def get_spark(
 ) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # Make this package importable in executor Python workers regardless of
-    # the driver's cwd — the local-mode analogue of `spark-submit --py-files`.
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pypath = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in pypath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + pypath if pypath else "")
-        )
+    ensure_pythonpath()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
     b = (
@@ -38,31 +35,17 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # UDF stages cost ~per ROW, not per byte: AQE's 64 MB advisory size
-        # coalesces a 60 MB tile-shuffle into 1-2 partitions and strands the
-        # cluster on pandas work. 4 MB keeps post-shuffle stages wide enough.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Small Arrow batches + a large worker pipe buffer pipeline the
-        # JVM<->Python transfer of fat binary rows (~3.5x on the 2.5 GB
-        # image column: 10.2s -> 2.9s measured) — big batches serialize
-        # whole-batch-at-a-time and stall both sides on the default 64k pipe.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        # large worker pipe buffer, paired with SESSION_CONFS' small
+        # Arrow batches
         .config("spark.buffer.size", str(1024 * 1024))
-        # Decode/render UDFs are CPU-heavy per byte: the 128 MB default packs
-        # a whole image table into a handful of scan tasks and strands the
-        # other cores (observed 8/32 busy). 32 MB splits ~= seconds-long
-        # tasks — the Spark analogue of the warp chunk memory budget
-        # (alg/gdalwarpoperation.cpp:611 dfWarpMemoryLimit).
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
+    for k, v in SESSION_CONFS.items():
+        b = b.config(k, v)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -8,8 +8,10 @@ skip-if-exists (gdal2tiles.py:1492-1495) and streamed GDALG pipelines
   (``readStream`` + ``availableNow`` trigger) rendering base tiles via
   foreachBatch — new parquet files landing in the source dir are tiled on
   the next run, with exactly-once progress tracked in the checkpoint dir.
-* ``resume_tiles``: the batch resume path — anti-join planned tile keys
-  against the already-written sink before any decode work happens.
+* ``resume_tiles``: the batch resume path — anti-join rendered tile keys
+  against the already-written sink, so only missing tiles are returned.
+  The anti-join sits above the render: every image is still decoded and
+  rendered, only the output rows (and their writes) are skipped.
 * ``windowed_event_counts``: watermarked tumbling-window streaming agg over
   the events table (the Spark-native semantics GDAL lacks, included for
   engine completeness).
@@ -49,10 +51,11 @@ def incremental_tiles(spark: SparkSession, source_dir: str, sink_dir: str,
 
 def resume_tiles(spark: SparkSession, images: DataFrame, sink_dir: str,
                  method: str = "nearest") -> DataFrame:
-    """Batch resume (--resume semantics): render only tiles whose
+    """Batch resume (--resume semantics): return only tiles whose
     (image_id, z, x, y) key is absent from the sink. The anti-join runs on
     the cheap key projection of the sink (column pruning: tile bytes are
-    never read)."""
+    never read). It is applied to the rendered rows, so every image is
+    still decoded and rendered; the skipped tiles are never written."""
     try:
         existing = spark.read.parquet(sink_dir).select("image_id", "z", "x", "y")
     except Exception:

@@ -6,6 +6,7 @@ import pytest
 
 from gdal_spark.codecs.registry import decode
 from gdal_spark.fixtures.images import generate_images_pdf
+from gdal_spark.oracle.checksum import checksum_image
 from gdal_spark.oracle.tiling import build_pyramid, native_zoom, render_image_tiles
 
 
@@ -73,23 +74,17 @@ def test_pyramid_matches_oracle(spark, images_pdf, images_sdf):
     per_img = got.groupby("image_id")["z"].min()
     assert (per_img == tminz).all()
 
-
-def test_distributed_pyramid_equals_per_image(spark, images_sdf):
-    """The level-loop (distributed, for block-split giant rasters / resume)
-    and the map-only per-image path must produce identical tile sets and
-    checksums."""
-    from gdal_spark.operators.tiling import build_tile_pyramid
-
-    cols = ["image_id", "z", "x", "y", "cs1", "cs2", "cs3"]
-    a = build_tile_pyramid(
-        images_sdf, tminz=7, per_image=True
-    ).toPandas()[cols].sort_values(cols[:4], ignore_index=True)
-    b = build_tile_pyramid(
-        images_sdf, tminz=7, per_image=False
-    ).toPandas()[cols].sort_values(cols[:4], ignore_index=True)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a, b)
+    # codec=None: same keys and checksums, no tile bytes at all
+    bare = build_tile_pyramid(images_sdf, tminz=tminz, codec=None).toPandas()
+    assert bare["tile"].isna().all()
+    assert len(bare) == len(exp)
+    assert {(r.image_id, r.z, r.x, r.y)
+            for r in bare.itertuples(index=False)} == set(exp.keys())
+    for r in bare.itertuples(index=False):
+        cs = [int(v) for v in (r.cs1, r.cs2, r.cs3) if not pd.isna(v)]
+        assert cs == list(checksum_image(exp[(r.image_id, r.z, r.x, r.y)])), (
+            f"{r.image_id} z{r.z} ({r.x},{r.y})"
+        )
 
 
 def test_resume_anti_join_skips_existing(spark, images_sdf):
@@ -97,8 +92,6 @@ def test_resume_anti_join_skips_existing(spark, images_sdf):
 
     first = render_base_tiles(images_sdf).select("image_id", "z", "x", "y")
     first_pdf = first.toPandas()
-    from gdal_spark.operators.tiling import build_tile_pyramid
-
     base_again = render_base_tiles(images_sdf).join(
         spark.createDataFrame(first_pdf), ["image_id", "z", "x", "y"], "left_anti"
     )
