@@ -454,13 +454,36 @@ class TestLayerAlgebraCompletion:
 
 class TestContourOperator:
     def test_contour_operator(self, spark):
+        from gdal_spark.codecs.registry import decode
         from gdal_spark.fixtures.images import generate_images_pdf
-        from gdal_spark.operators.rasterops import contour
+        from gdal_spark.operators.rasterops import contour, contour_lines
+        from gdal_spark.oracle.contour import contour_polylines
+        from gdal_spark.oracle.geom import parse_wkb
 
-        imgs = spark.createDataFrame(generate_images_pdf(3))
+        pdf = generate_images_pdf(3)
+        imgs = spark.createDataFrame(pdf)
         got = contour(imgs).toPandas()
         assert set(got["level"].unique()) <= {64.0, 128.0, 192.0}
         assert (got["n_segments"] > 0).all()
+
+        # contour_lines: per (image, level) polyline count and length equal
+        # the oracle's chained polylines on the same nearest-64 pixels
+        exp = {}
+        for r in pdf.itertuples(index=False):
+            a = decode(r.bytes)[:, :, 0].astype(np.float64)
+            if max(a.shape) > 64:
+                a = RS.resample_nearest(a, 64, 64)
+            for lv, lines in contour_polylines(a, [64.0, 128.0, 192.0]).items():
+                if lines:
+                    exp[(r.image_id, lv)] = (len(lines), sum(
+                        np.hypot(*np.diff(ln, axis=0).T).sum() for ln in lines))
+        got = contour_lines(imgs).toPandas().set_index(["image_id", "level"])
+        assert len(exp) > 0 and set(got.index) == set(exp)
+        for k, (n, total) in exp.items():
+            assert got.loc[k, "n_lines"] == n
+            assert got.loc[k, "total_len"] == pytest.approx(total, abs=1e-4)
+            kind, parts = parse_wkb(got.loc[k, "wkb"])
+            assert kind == "multilinestring" and len(parts) == n
 
     def test_fill_nodata_operator(self, spark):
         from gdal_spark.fixtures.images import generate_images_pdf

@@ -45,7 +45,7 @@ class TestTranslate:
 
 
 class TestWarp:
-    @pytest.mark.parametrize("method", ["nearest", "bilinear"])
+    @pytest.mark.parametrize("method", ["nearest", "bilinear", "cubic"])
     def test_warp_matches_oracle(self, spark, imgs, imgs_pdf, method):
         from gdal_spark.operators.rasterops import warp_to_wgs84
 
@@ -170,12 +170,31 @@ class TestFootprintZonal:
         M = a * (1 - ee) / (1 - ee * np.sin(phi) ** 2) ** 1.5
         assert abs((n2 - n1) / (M * np.radians(0.001)) - 0.9996) < 1e-6
 
-    def test_warp_utm_runs(self, spark, imgs):
+    def test_warp_utm_runs(self, spark, imgs, imgs_pdf):
         from gdal_spark.operators.rasterops import warp_utm
+        from gdal_spark.oracle import utm as U
+        from gdal_spark.oracle.warp import warp_utm_to_4326
 
         got = warp_utm(imgs, "bilinear").toPandas()
         assert len(got) == imgs.count()
         assert (got["cs1"] >= 0).all() and got["zone"].between(1, 60).all()
+        # a point kernel and a box statistic equal the oracle warp of the
+        # image georeferenced at its center's UTM zone
+        small = imgs_pdf.head(2)
+        for method in ("bilinear", "q3"):
+            got = warp_utm(spark.createDataFrame(small), method).toPandas()
+            got = got.set_index("image_id")
+            for r in small.itertuples(index=False):
+                a = decode(r.bytes)
+                h, w = a.shape[:2]
+                zone, south = U.utm_zone_for_lon(r.lon), r.lat < 0
+                e0, n0 = U.lonlat_to_utm(r.lon, r.lat, zone, south)
+                gt = [e0 - w / 2.0 * r.gsd_m, r.gsd_m, 0.0,
+                      n0 + h / 2.0 * r.gsd_m, 0.0, -r.gsd_m]
+                exp, _ = warp_utm_to_4326(a, gt, zone, method, south)
+                row = got.loc[r.image_id]
+                assert row["zone"] == zone
+                assert [row["cs1"], row["cs2"], row["cs3"]] == checksum_image(exp)
 
     def test_pansharpen_brovey(self, spark, imgs, imgs_pdf):
         """Fusing the downsampled spectral with the full-res pan must beat
@@ -986,6 +1005,20 @@ class TestTranslateResampling:
             assert decode(row["bytes"]).shape[:2] == (20, 24)
             cs[m] = row["cs1"]
         assert cs["nearest"] != cs["average"]
+
+    def test_overview_gauss_rms(self, spark, imgs, imgs_pdf):
+        from gdal_spark.operators.rasterops import overview_downsample
+        from gdal_spark.oracle.resample import gauss_2x2, rms_2x2
+
+        for method, kernel in (("gauss", gauss_2x2), ("rms", rms_2x2)):
+            got = overview_downsample(imgs, method).toPandas().set_index(
+                "image_id")
+            for r in imgs_pdf.head(4).itertuples(index=False):
+                a = decode(r.bytes)
+                v = kernel(a[:a.shape[0] & ~1, :a.shape[1] & ~1])
+                row = got.loc[r.image_id]
+                assert (row["h2"], row["w2"]) == v.shape[:2]
+                assert [row["cs1"], row["cs2"], row["cs3"]] == checksum_image(v)
 
 
 class TestMosaicResolution:

@@ -1,7 +1,7 @@
 """OGR feature style parser (ogr/ogrfeaturestyle.cpp grammar)."""
 
-from gdal_spark.functions.style import (parse_style_string, split_unit,
-                                        style_param)
+from gdal_spark.functions.style import (parse_style, parse_style_string,
+                                        split_unit, style_param)
 
 
 class TestGrammar:
@@ -72,6 +72,18 @@ class TestSparkSurface:
         ).orderBy("id").collect()
         assert [(r["w"], r["t"]) for r in got] == [
             ("5px", "a;b"), (None, None), (None, None)]
+
+        # parse_style: each row equals the scalar grammar's parse
+        escaped = spark.createDataFrame(
+            [(4, 'PEN(c:#00000A,w:3px);BRUSH(fc:#00FF00);'
+                 'LABEL(f:"Arial, Bold",t:"c;4:\\"x\\"",s:12pt,bo)')],
+            "id int, style string")
+        parsed = df.unionByName(escaped).select(
+            "id", "style", parse_style("style").alias("p")
+        ).orderBy("id").collect()
+        for r in parsed:
+            exp = parse_style_string(r["style"]) if r["style"] else []
+            assert [(t["tool"], dict(t["params"])) for t in r["p"]] == exp
 
         sf = with_special_fields(df, geom_col=None)
         rows = sf.orderBy("id").collect()
